@@ -88,9 +88,11 @@ def session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``F.session_window`` (used in streaming/jobs.py) with oracle parity."""
     e = load_table(spark, sf_dir, "events")
     w_order = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.col("ts").cast("long") - F.lag(F.col("ts").cast("long")).over(w_order)
+    # microsecond gap: a whole-second cast would truncate a 1800.013 s gap
+    us = F.unix_micros("ts")
+    gap = us - F.lag(us).over(w_order)
     new_session = F.when(
-        gap.isNull() | (gap > SESSION_GAP_MIN * 60), F.lit(1)
+        gap.isNull() | (gap > SESSION_GAP_MIN * 60 * 1_000_000), F.lit(1)
     ).otherwise(F.lit(0))
     w_run = w_order.rowsBetween(Window.unboundedPreceding, 0)
     return (
@@ -110,7 +112,8 @@ SESSION_SQL = f"""
 WITH flagged AS (
   SELECT user_id, event_id, ts,
          CASE WHEN lag(ts) OVER w IS NULL
-                   OR epoch(ts) - epoch(lag(ts) OVER w) > {SESSION_GAP_MIN * 60}
+                   OR epoch_us(ts) - epoch_us(lag(ts) OVER w)
+                      > {SESSION_GAP_MIN * 60 * 1_000_000}
               THEN 1 ELSE 0 END AS new_s
   FROM events
   WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)

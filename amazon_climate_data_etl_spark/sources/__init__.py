@@ -3,6 +3,10 @@
 Spark has no NetCDF or Shapefile connector (SURVEY.md §2.1 S1/S2); the
 engine's design decision is an *ingest boundary*: one-time relationalization
 jobs produce partitioned Parquet, and every query runs against that. The
-modules here implement the boundary patterns plus the CSV sinks the
-reference writes (S3–S5).
+modules here hold one dependency-free decoder per input format — NetCDF
+(``netcdf_classic`` + ``netcdf4_min``/``hdf5_min``), shapefile
+(``shapefile_min`` + ``crs_min``), WARC (``warc_min``), GeoTIFF
+(``geotiff_min``), Zarr (``zarr_min`` with the ``blosc_min``/``zstd_min``
+codecs) and Arrow IPC (``arrow_ipc``) — plus the CSV sinks the reference
+writes (S3–S5).
 """

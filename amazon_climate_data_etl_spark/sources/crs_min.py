@@ -1,10 +1,9 @@
 """Minimal projected-CRS support for the dependency-free shapefile path.
 
 The reference reprojects every shapefile to EPSG:4326 unconditionally
-(process_climate_amazon_annual.py:159-161, via geopandas/pyproj). Without
-geopandas in the container, the minimal ingest previously REFUSED
-projected ``.prj`` files; this module closes that gap for the projections
-Brazilian municipal shapefiles actually ship:
+(process_climate_amazon_annual.py:159-161, via geopandas/pyproj). The
+package's shapefile ingest carries neither library; this module inverts the
+projections Brazilian municipal shapefiles actually ship:
 
 - **Transverse Mercator** (all SIRGAS 2000 / UTM zones) — forward and
   inverse via the Krüger n-series (public formulas, e.g. Karney 2011
@@ -19,8 +18,7 @@ Everything is numpy-vectorized: reprojection happens driver-side over the
 ~5,570-municipality dimension (a few hundred thousand vertices), well
 under a second. WKT parsing is a deliberately loose regex extraction of
 SPHEROID / PROJECTION / PARAMETER — enough for ESRI/OGC WKT1 ``.prj``
-files; unsupported projections raise with a pointer at the geopandas
-path.
+files; unsupported projections raise ``NotImplementedError``.
 """
 
 from __future__ import annotations
@@ -79,17 +77,17 @@ def parse_projected_prj(wkt: str) -> ProjectedCRS | None:
     if not units:
         raise NotImplementedError(
             "projected .prj without a parseable UNIT clause; refusing to "
-            "assume metres — use the geopandas path"
+            "assume metres"
         )
     if abs(float(units[-1]) - 1.0) > 1e-9:
         raise NotImplementedError(
-            "projected CRS with non-metre units; use the geopandas path"
+            "projected CRS with non-metre units is not supported"
         )
     if proj not in _SUPPORTED:
         raise NotImplementedError(
-            f"projection {proj!r} is not supported by the minimal "
-            "reprojection (Transverse_Mercator / Polyconic); use the "
-            "geopandas path"
+            f"projection {proj!r} is not supported (Transverse_Mercator / "
+            "Polyconic only); reproject the shapefile to a geographic CRS "
+            "first, e.g. with ogr2ogr or geopandas to_crs"
         )
     return ProjectedCRS(proj, a, inv_f, params)
 

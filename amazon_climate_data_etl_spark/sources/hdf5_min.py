@@ -43,11 +43,11 @@ creation parameters, i.e. the chunk counts a 100 TB archive actually
 holds) read AND write: page-init bitmaps (H5VM MSB-first bit order) in
 the FA data block / EA super block, element pages trailing each block.
 
-Anything outside this raises ``NotImplementedError`` with a pointer at the
-full-featured (h5py/xarray) path: filtered fractal heaps, indirect heap
-sub-blocks, huge/tiny heap IDs, paged data blocks addressed straight from
-an EA index block (a creation-parameter corner libhdf5's defaults cannot
-produce), compound/array datatypes in dataset data, and exotic filters.
+Anything outside this raises ``NotImplementedError``: filtered fractal
+heaps, indirect heap sub-blocks, huge/tiny heap IDs, paged data blocks
+addressed straight from an EA index block (a creation-parameter corner
+libhdf5's defaults cannot produce), compound/array datatypes in dataset
+data, and exotic filters.
 
 The writer emits spec-valid files in BOTH flavors libhdf5 produces —
 superblock v0 + v1 object headers + symbol-table groups (the library
@@ -228,8 +228,7 @@ def _parse_datatype(buf: bytes, pos: int) -> tuple[DType, int]:
         base, pos = _parse_datatype(buf, pos)
         return DType(cls, size, None, base), pos
     raise NotImplementedError(
-        f"HDF5 datatype class {cls} (version {version}) not supported by "
-        "the minimal reader; use the h5py/xarray path"
+        f"HDF5 datatype class {cls} (version {version}) not supported"
     )
 
 
@@ -442,7 +441,7 @@ class _H5Reader:
         filt_len, = struct.unpack_from("<H", buf, addr + 7)
         if filt_len:
             raise NotImplementedError(
-                "filtered fractal heap not supported (needs the h5py path)"
+                "filtered fractal heap not supported"
             )
         flags = buf[addr + 9]
         max_managed, = struct.unpack_from("<I", buf, addr + 10)
@@ -466,8 +465,7 @@ class _H5Reader:
             )
             if cur_rows > max_direct_rows:
                 raise NotImplementedError(
-                    "fractal heap with indirect sub-blocks not supported "
-                    "(needs the h5py path)"
+                    "fractal heap with indirect sub-blocks not supported"
                 )
             pos = root_addr + 4 + 1 + 8 + off_size
             linear = 0
@@ -487,8 +485,7 @@ class _H5Reader:
             b0 = heap_id[0]
             if (b0 >> 4) & 0x3 != 0:
                 raise NotImplementedError(
-                    "huge/tiny fractal-heap object IDs not supported "
-                    "(needs the h5py path)"
+                    "huge/tiny fractal-heap object IDs not supported"
                 )
             off = int.from_bytes(heap_id[1 : 1 + off_size], "little")
             ln = int.from_bytes(
@@ -781,7 +778,7 @@ class _H5Reader:
         version, cls = body[0], body[1]
         if version not in (3, 4):
             raise NotImplementedError(
-                f"data layout message version {version} (needs the h5py path)"
+                f"data layout message version {version} not supported"
             )
         n = int(np.prod(shape)) if shape else 1
         if cls == 0:  # compact (same fields in v3 and v4)
@@ -883,7 +880,7 @@ class _H5Reader:
                 addr, chunk_shape, csize, len(shape), name
             )
         raise NotImplementedError(
-            f"v4 chunk index type {idx_type} (use the h5py path)"
+            f"v4 chunk index type {idx_type} not supported"
         )
 
     def _extensible_array_chunks(self, addr, grid, csize, name):
@@ -1027,7 +1024,7 @@ class _H5Reader:
                         # (there is nowhere to store their page bitmap)
                         raise NotImplementedError(
                             "paged data block addressed from the index "
-                            "block (use the h5py path)"
+                            "block not supported"
                         )
                     daddr = dblk_addrs[s_dblk + dblk_i]
                     if daddr == UNDEF:

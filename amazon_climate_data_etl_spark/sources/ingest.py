@@ -8,15 +8,20 @@ Reference inputs (``/root/reference/scripts/process_climate_amazon_annual.py``):
 Spark-first design: both become **one-time ingest jobs** producing Parquet;
 the query layer never touches NetCDF/SHP. The NetCDF job distributes via
 ``spark.read.format("binaryFile")`` + ``mapInPandas`` (one file per task,
-xarray inside the Arrow batch iterator); at 100 TB of grids you'd partition
-output by (var, year) so downstream year filters prune partitions.
+decoded inside the Arrow batch iterator); output is partitioned by year so
+downstream year filters prune partitions.
 
-Decode backends: xarray when importable (any NetCDF flavor, including
-NetCDF-4/HDF5); otherwise the dependency-free classic-format reader in
-``netcdf_classic.py`` — so the REAL decode path for CDF-1/CDF-2 files runs
-and is tested in this container (the same pattern as the minimal PNG
-decoder in ``multimodal.py``). Shapefile ingest (geopandas) remains
-import-gated with the precomputed-centroid fallback.
+One decoder per input format, with no third-party dependency:
+- NetCDF: ``decode_classic_long`` over ``netcdf_classic.read_classic``,
+  which reads CDF-1/CDF-2 itself and hands NetCDF-4/HDF5 files to
+  ``netcdf4_min``.
+- Shapefile: ``municipalities_from_shapefile`` over ``shapefile_min``, with
+  ``crs_min`` reprojecting the UTM/Polyconic CRSs Brazilian municipal files
+  ship.
+- GeoTIFF (one raster per day) and Zarr stores: ``ingest_geotiff_to_parquet``
+  and ``ingest_zarr_to_parquet`` over ``geotiff_min`` / ``zarr_min``, writing
+  the same year-partitioned grid layout as the NetCDF job.
+Inputs outside those readers' coverage raise ``NotImplementedError``.
 """
 
 from __future__ import annotations
@@ -71,7 +76,7 @@ def probe_coord_dims(
     (last match wins, as in the reference loop), then coordinates (first
     match fills a still-missing slot), then fall back to
     ``longitude``/``latitude`` if present among dims/coords, else
-    ``lon``/``lat``. Pure function — testable without xarray."""
+    ``lon``/``lat``."""
     lon_dim = lat_dim = None
     for dim in dims:
         d = dim.lower()
@@ -106,44 +111,9 @@ def probe_time_dim(dims: "list[str] | tuple[str, ...]") -> str:
     return "time"
 
 
-def lat_ordered_slice(first: float, last: float, lat_min: float, lat_max: float):
-    """Axis-direction-aware latitude slice bounds.
-
-    ``xr.Dataset.sel(lat=slice(a, b))`` selects NOTHING when the slice runs
-    against the axis direction; the reference flips the bounds on a
-    descending (north-up) latitude axis
-    (process_climate_amazon_annual.py:231-248). Returns the (start, stop)
-    pair to pass to ``slice`` for this axis ordering."""
-    if first > last:  # descending latitude: start at the max
-        return lat_max, lat_min
-    return lat_min, lat_max
-
-
-def normalize_grid_long(
-    long: pd.DataFrame,
-    var_name: str,
-    lon_dim: str,
-    lat_dim: str,
-    time_dim: str = "time",
-) -> pd.DataFrame:
-    """Decoded long table (any dim naming / axis direction) → the canonical
-    (date, lat, lon, var, value) frame of GRID_DAILY_SCHEMA. Row order is
-    irrelevant downstream (the pivot keys on (date, lat, lon)), so a
-    descending-latitude file needs no reordering here — only the clip slice
-    direction matters (``lat_ordered_slice``)."""
-    long = long.rename(
-        columns={time_dim: "date", lat_dim: "lat", lon_dim: "lon", var_name: "value"}
-    )
-    long["var"] = var_name
-    long["date"] = pd.to_datetime(long["date"]).dt.date
-    long["lat"] = long["lat"].astype(float)
-    long["lon"] = long["lon"].astype(float)
-    return long[["date", "lat", "lon", "var", "value"]]
-
-
 def _decode_time_units(values, units: str):
-    """CF time decode for the minimal path: '<unit> since <base>' with
-    unit in days/hours/minutes/seconds."""
+    """CF time decode: '<unit> since <base>' with unit in
+    days/hours/minutes/seconds."""
     import datetime as dt
 
     parts = units.split(" since ", 1)
@@ -161,10 +131,9 @@ def _decode_time_units(values, units: str):
 
 
 def _gate_cf_calendar(calendar) -> None:
-    """Shared CF-calendar gate (NetCDF + Zarr minimal decode paths):
-    noleap/365_day/360_day etc. are common in climate model output, and
-    decoding them as proleptic-Gregorian silently shifts every date — so
-    fail loudly and point at the full-featured decode path."""
+    """CF-calendar gate of the NetCDF and Zarr decoders: noleap/365_day/360_day etc.
+    are common in climate model output, and decoding them as
+    proleptic-Gregorian silently shifts every date — so fail loudly."""
     if isinstance(calendar, bytes):
         calendar = calendar.decode("ascii", "replace")
     if calendar is not None and str(calendar).lower() not in (
@@ -173,9 +142,8 @@ def _gate_cf_calendar(calendar) -> None:
         "proleptic_gregorian",
     ):
         raise NotImplementedError(
-            f"CF calendar {calendar!r} is not supported by the minimal "
-            "decoder (standard/gregorian/proleptic_gregorian only); use "
-            "the xarray path"
+            f"CF calendar {calendar!r} is not supported "
+            "(standard/gregorian/proleptic_gregorian only)"
         )
 
 
@@ -189,9 +157,8 @@ def decode_classic_long(
     dispatches the HDF5 magic to the minimal HDF5 decoder,
     netcdf4_min.py — superblock v0/v2, contiguous + shuffled/deflated
     chunked storage, dimension scales + DIMENSION_LIST). CF unpacking
-    (scale/offset, _FillValue → NaN) is shared. Probing and normalization
-    are shared with the xarray branch. Bounds are applied as coordinate
-    masks, which are direction-agnostic — a descending (north-up)
+    (scale/offset, _FillValue → NaN) is shared. Bounds are applied as
+    coordinate masks, which are direction-agnostic — a descending (north-up)
     latitude axis clips identically."""
     nc = read_classic(content)
     var = nc.variables[var_name]
@@ -201,7 +168,7 @@ def decode_classic_long(
         if d not in nc.variables:
             raise NotImplementedError(
                 f"dimension {d!r} has no coordinate variable in this file; "
-                "auxiliary-coordinate layouts need the xarray decode path"
+                "auxiliary-coordinate layouts are not supported"
             )
     order = [var.dims.index(d) for d in (time_dim, lat_dim, lon_dim)]
     cube = np.transpose(np.asarray(var.data), order).astype(np.float64)
@@ -236,55 +203,12 @@ def decode_classic_long(
 def _decode_netcdf_batch(
     batches: Iterator[pd.DataFrame], var_name: str, bounds: dict | None = None
 ) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: binaryFile rows → long-format grid rows.
-
-    Each input row is (path, modificationTime, length, content). The
-    coordinate axes are probed by name
-    (``lon``/``lat``/``x``/``y``/``longitude``/``latitude``), an optional
-    bounding box is clipped with descending-latitude handling, and the
-    result is normalized to (date, lat, lon, var, value). Decode backend:
-    xarray when importable (any NetCDF flavor, e.g. NetCDF-4 layouts the
-    minimal readers gate on); otherwise the built-in readers — REAL
-    decode for CDF-1/CDF-2 (``netcdf_classic.py``) AND NetCDF-4/HDF5
-    (``netcdf4_min.py``) with no dependencies, so both flavors run and
-    are tested in this container.
-    """
-    try:
-        import io
-
-        import xarray as xr
-    except ImportError:
-        xr = None
+    """mapInPandas worker: binaryFile rows (path, modificationTime, length,
+    content) → long-format grid rows, one ``decode_classic_long`` call per
+    file."""
     for pdf in batches:
-        for _, row in pdf.iterrows():
-            content = bytes(row["content"])
-            if xr is None:
-                yield decode_classic_long(content, var_name, bounds)
-                continue
-            ds = xr.open_dataset(io.BytesIO(content))  # pragma: no cover
-            lon_dim, lat_dim = probe_coord_dims(  # pragma: no cover
-                list(ds.dims), list(ds.coords)
-            )
-            time_dim = probe_time_dim(list(ds.dims))  # pragma: no cover
-            if bounds is not None:  # pragma: no cover
-                lat_values = ds[lat_dim].values
-                lo, hi = lat_ordered_slice(
-                    float(lat_values[0]),
-                    float(lat_values[-1]),
-                    bounds["lat_min"],
-                    bounds["lat_max"],
-                )
-                ds = ds.sel(
-                    **{
-                        lon_dim: slice(bounds["lon_min"], bounds["lon_max"]),
-                        lat_dim: slice(lo, hi),
-                    }
-                )
-            da = ds[var_name]  # pragma: no cover
-            long = da.to_dataframe().reset_index()  # pragma: no cover
-            yield normalize_grid_long(  # pragma: no cover
-                long, var_name, lon_dim, lat_dim, time_dim
-            )
+        for content in pdf["content"]:
+            yield decode_classic_long(bytes(content), var_name, bounds)
 
 
 _DATE_IN_NAME = r"(\d{4})-?(\d{2})-?(\d{2})"
@@ -393,7 +317,7 @@ def probe_zarr_climate(store_path: str, var_name: str):
     if not dims or len(dims) != len(meta.shape):
         raise NotImplementedError(
             f"array {var_name!r} carries no usable _ARRAY_DIMENSIONS "
-            "attribute; name-free Zarr layouts need the xarray decode path"
+            "attribute; name-free Zarr layouts are not supported"
         )
     lon_dim, lat_dim = probe_coord_dims(dims)
     time_dim = probe_time_dim(dims)
@@ -586,49 +510,13 @@ def municipalities_from_shapefile(
 ) -> DataFrame:
     """Shapefile → centroid dimension table (S2, annual.py:125-168).
 
-    Geometry work (CRS normalize → centroid) happens driver-side — a
-    ~5,570-row table does not need distribution. Backend: geopandas when
-    importable (full format + reprojection coverage); otherwise the
-    dependency-free reader in ``shapefile_min.py`` decodes .shp/.dbf and
-    computes shoelace centroids — REAL shapefile ingest with no libraries,
-    limited to already-geographic CRSs (a projected .prj raises with a
-    pointer at the geopandas path)."""
-    try:
-        import geopandas as gpd
-    except ImportError:
-        gpd = None
-    if gpd is None:
-        return _municipalities_from_shapefile_minimal(spark, shp_path, states)
-    gdf = gpd.read_file(shp_path)  # pragma: no cover - env without geopandas
-    state_col = _probe_state_column(gdf.columns)  # pragma: no cover
-    if state_col is None:  # pragma: no cover
-        gdf["UF"] = gdf["CD_MUN"].astype(str).str[:2].map(IBGE_PREFIX_TO_UF)
-        state_col = "UF"
-    gdf = gdf[gdf[state_col].isin(states)]  # pragma: no cover
-    if gdf.crs is None or gdf.crs.to_epsg() != 4326:  # pragma: no cover
-        gdf = gdf.to_crs(4326)
-    cent = gdf.geometry.centroid  # pragma: no cover
-    pdf = pd.DataFrame(  # pragma: no cover
-        {
-            "CD_MUN": gdf["CD_MUN"].astype(str),
-            "NM_MUN": gdf["NM_MUN"].astype(str),
-            "UF": gdf[state_col].astype(str),
-            "lon": cent.x,
-            "lat": cent.y,
-        }
-    )
-    return municipalities_from_pandas(spark, pdf)  # pragma: no cover
-
-
-def _municipalities_from_shapefile_minimal(
-    spark: SparkSession, shp_path: str, states: tuple[str, ...]
-) -> DataFrame:
-    """Dependency-free S2 path: shapefile_min decode + shoelace centroids,
-    with the reference's state-column probing and IBGE-prefix fallback.
-    Projected CRSs (UTM zones, Brazil Polyconic) reproject to geographic
-    via crs_min before centroid computation — the reference's
-    unconditional to_crs(4326); other projections raise with a pointer at
-    the geopandas path."""
+    Geometry work happens driver-side — a ~5,570-row table does not need
+    distribution. ``shapefile_min`` decodes .shp/.dbf and computes shoelace
+    centroids, with the reference's state-column probing and IBGE-prefix
+    fallback. Projected CRSs (UTM zones, Brazil Polyconic) reproject to
+    geographic via ``crs_min`` before centroid computation — the
+    reference's unconditional to_crs(4326); any other projection raises
+    ``NotImplementedError``."""
     import os
 
     from amazon_climate_data_etl_spark.sources.shapefile_min import (

@@ -53,8 +53,8 @@ def read_netcdf4(content: bytes) -> NcFile:
     datasets = read_hdf5(content)
     if any("/" in name for name in datasets):
         raise NotImplementedError(
-            "NetCDF-4 groups are not supported by the minimal reader "
-            "(root-group variables only); use the xarray path"
+            "NetCDF-4 groups are not supported "
+            "(root-group variables only)"
         )
     # dimension scales: name -> size, plus address -> name for the
     # DIMENSION_LIST reference resolution

@@ -15,8 +15,8 @@ Supported surface (what the municipality-dimension ingest needs):
 
 CRS handling: geographic (degree) CRSs pass through untouched; projected
 CRSs are inverted by ``crs_min.py`` (Transverse Mercator / Polyconic —
-what Brazilian municipal shapefiles ship); anything else requires the
-geopandas path.
+what Brazilian municipal shapefiles ship); anything else raises
+``NotImplementedError``.
 """
 
 from __future__ import annotations
@@ -66,8 +66,8 @@ def read_shp(content: bytes) -> list[Shape]:
             shapes.append(Shape(SHP_POLYGON, pts.copy(), tuple(parts)))
         else:
             raise NotImplementedError(
-                f"shape type {stype} not supported by the minimal reader "
-                "(Point and Polygon only); use the geopandas path"
+                f"shape type {stype} not supported "
+                "(Point and Polygon only)"
             )
         pos = rec_end
     return shapes

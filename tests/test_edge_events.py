@@ -89,6 +89,10 @@ _ROWS = [
     (23, _ns("2024-03-05 10:05:00"), 8, "error", 1.0, "{}"),
     (24, _ns("2024-03-05 10:05:00"), 8, "click", 1.0, "{}"),
     (25, _ns("2024-03-05 11:00:00"), 8, "error", 1.0, "{}"),
+    # u9 (distant day): session gap of 30 min + 13 ms — over the threshold
+    # only when the gap is measured below whole seconds (new session)
+    (26, _ns("2024-03-07 08:00:00"), 9, "view", 1.0, "{}"),
+    (27, _ns("2024-03-07 08:30:00.013"), 9, "view", 1.0, "{}"),
 ]
 
 
@@ -137,6 +141,8 @@ def test_edge_events_fixture_semantics(spark, edge_events_dir):
     }
     # u2: events at 08:00, 08:30 share a session; 09:00:01 starts a new one
     assert sessions[(2, 1)] == 2 and sessions[(2, 2)] == 1
+    # u9: a 1800.013 s gap splits the session
+    assert sessions[(9, 1)] == 1 and sessions[(9, 2)] == 1
 
     asof_rows = QUERIES["asof_join_events"](spark, edge_events_dir).collect()
     asof = {

@@ -686,6 +686,31 @@ def test_bloom_filter_pruning(spark, sf_dir):
     assert "l_partkey" in probe, probe
 
 
+def test_crawl_write_derives_above_file_seq_exchange(spark, sf_dir, monkeypatch):
+    """crawl_e2e's WRITE job (a separate plan, run before the returned read
+    plan exists) applies the regex-heavy PII plant + markup synth ABOVE
+    the file_seq exchange: below it they would run inside the one-task
+    parquet scan. The frame the segment writer groups is captured and its
+    plan checked: the ``html`` projection sits above the exchange, which
+    carries the raw text instead."""
+    from pyspark.sql.group import GroupedData
+
+    grouped = []
+    apply_in_pandas = GroupedData.applyInPandas
+
+    def spy(self, func, schema):
+        grouped.append(self._df)
+        return apply_in_pandas(self, func, schema)
+
+    monkeypatch.setattr(GroupedData, "applyInPandas", spy)
+    QUERIES["crawl_e2e"](spark, sf_dir)
+    (write_frame,) = [df for df in grouped if "html" in df.columns]
+    plan = I.plan_string(write_frame, "simple")
+    exchange = plan.index("Exchange hashpartitioning(file_seq")
+    assert " AS html#" in plan[:exchange], plan
+    assert " AS html#" not in plan[exchange:], plan
+
+
 def test_q19_disjunction_pushdown(spark, sf_dir):
     """The OR-of-ANDs predicate mixes columns from both join sides; each
     side's implied disjunction must still reach ITS parquet scan (the

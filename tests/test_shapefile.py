@@ -114,7 +114,7 @@ def _write_fixture(tmp_path, with_state_col=True, prj=None):
 
 
 def test_municipalities_from_shapefile_real_path(spark, tmp_path):
-    """REAL S2 ingest with no geopandas: .shp+.dbf decode, state filter,
+    """REAL S2 ingest: .shp+.dbf decode, state filter,
     shoelace centroids → broadcast-ready dimension."""
     path = _write_fixture(tmp_path, prj='GEOGCS["SIRGAS 2000"]')
     dim = municipalities_from_shapefile(spark, path).orderBy("CD_MUN")
@@ -138,8 +138,8 @@ def test_municipalities_ibge_prefix_fallback(spark, tmp_path):
 
 
 def test_unsupported_projection_requires_geopandas(spark, tmp_path):
-    """Projections outside crs_min's inventory (here Lambert conic) still
-    gate loudly on the geopandas path."""
+    """Projections outside crs_min's inventory (here Lambert conic) raise
+    rather than yield wrong centroids."""
     path = _write_fixture(
         tmp_path,
         prj='PROJCS["Custom LCC",GEOGCS["SIRGAS 2000",DATUM["D",'
@@ -147,7 +147,9 @@ def test_unsupported_projection_requires_geopandas(spark, tmp_path):
             'PROJECTION["Lambert_Conformal_Conic_2SP"],'
             'PARAMETER["central_meridian",-54],UNIT["metre",1]]',
     )
-    with pytest.raises(NotImplementedError, match="geopandas"):
+    with pytest.raises(
+        NotImplementedError, match="'lambert_conformal_conic_2sp' is not supported"
+    ):
         municipalities_from_shapefile(spark, path)
 
 
