@@ -13,12 +13,9 @@ scan (SURVEY.md §4 — the reference's hand-written clip/column-open logic,
 from __future__ import annotations
 
 import os
-import sys
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-_KEYS_OVERRIDE_LOGGED = False
 
 TABLES = (
     "region",
@@ -123,45 +120,24 @@ def rebalance_for_compute(
     both sides of a self-join (each side keeps its own exchange — the
     fuzzy join measured one extra full exchange from exactly this).
     Hash-by-key stays deterministic and reusable; pass a high-cardinality
-    key so the spread is still even.
+    key so the spread is still even. A keyless exchange first pays a
+    full-row local sort of its input (``spark.sql.execution.
+    sortBeforeRepartition``), while hash-by-key needs no sort but spreads
+    only binomially, so BIG scans are keyed and SMALL tables with heavy
+    per-row downstream work stay keyless for round-robin's even spread,
+    unless a downstream operator on the key can reuse the keyed spread.
 
-    r14 keying rule, from alternating-arm measurement: a KEYLESS
-    round-robin exchange first pays a full-row local sort of its input
-    (``spark.sql.execution.sortBeforeRepartition``, on by default since
-    SPARK-23207 so retried map tasks reproduce the same row-to-partition
-    assignment), while hash-by-key needs no sort but spreads only
-    binomially (a 5k-row table over 32 partitions lands ±10% uneven).
-    So the choice is row-count-dependent:
-    - BIG scans (lineitem, 600k rows): the avoided sort dominates — KEY
-      them (1.03 → 0.55 s for the scan task; q1 2.18 → 1.22 s, and when
-      the key equals a downstream groupBy/join key the downstream
-      exchange is reused outright, q18 1.84 → 0.96 s).
-    - SMALL tables with HEAVY per-row downstream (documents 5k rows
-      before tokenize/shingle/decode, embeddings 2k rows before numpy
-      kernels): round-robin's PERFECT balance beats the trivial sort —
-      keyless (documents-family A/B total 7.06 vs 8.81 s median keyed;
-      ngram_jaccard_pairs 1.45 vs 2.22). ``SPARK_GRAFT_REBALANCE_KEYS=0``
-      forces the keyless arm for A/B reproduction. NOTE: ``keys`` only takes effect when
-    the fan-out actually happens — an input already at >= target
-    partitions takes the early return with NO exchange at all (which is
-    also deterministic: the scan itself is reused). Callers must not rely
-    on the output being hash-partitioned by ``keys`` for downstream
-    co-location; the contract is "deterministic + spread", never "keyed".
+    When the keyed spread fires, a downstream aggregate or join on the
+    same key reuses its hash partitioning and plans no exchange of its own.
+    That is a plan benefit only: an input already at >= target partitions
+    takes the early return with NO exchange at all (what a 100 TB scan
+    does), and the downstream operator then plans its usual exchange.
+    Callers must not rely on the output being hash-partitioned by
+    ``keys``; the contract is "deterministic + spread", never "keyed".
     """
     target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df
-    if os.environ.get("SPARK_GRAFT_REBALANCE_KEYS", "1") == "0":  # A/B aid
-        global _KEYS_OVERRIDE_LOGGED
-        if not _KEYS_OVERRIDE_LOGGED:  # once per process: a stray env var
-            # silently changing every plan's shape must be diagnosable
-            print(
-                "[catalog] SPARK_GRAFT_REBALANCE_KEYS=0: keyless round-robin "
-                "rebalance forced for A/B",
-                file=sys.stderr,
-            )
-            _KEYS_OVERRIDE_LOGGED = True
-        keys = ()
     if keys:
         # Guard: hash-by-key spreads over at most |distinct key values|
         # partitions, so keys need cardinality ≫ target (the call sites

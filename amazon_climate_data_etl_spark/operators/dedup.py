@@ -475,8 +475,11 @@ def _simhash_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     digit >= '8'); tokens vote ±1 per bit; the fingerprint takes the sign.
     Distinct tokens only (set semantics) so the vote is portable. At 64 bits
     you'd swap md5 nibbles for xxhash64 bit tests — same plan shape: explode
-    → 16 conditional sums → pack. One shuffle on doc_id."""
-    d = rebalance_for_compute(load_table(spark, sf_dir, "documents"))
+    → 16 conditional sums → pack. One shuffle on doc_id: the scan spread is
+    keyed on doc_id, so when it fires the vote aggregate reuses it."""
+    d = rebalance_for_compute(
+        load_table(spark, sf_dir, "documents"), keys=("doc_id",)
+    )
     tok = d.select(
         "doc_id", F.explode(F.array_distinct(tokens(ascii_lower(F.col("text"))))).alias("tok")
     ).withColumn("h", F.md5("tok"))
@@ -524,105 +527,41 @@ def simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Pairing happens in FINGERPRINT space, not document space: docs collapse
     onto far fewer distinct 16-bit prints (877 for 5,000 docs on the test
-    corpus; ≤ 65,536 always), qualifying print-pairs come from a broadcast
-    nested-loop over the distinct prints, and doc pairs are recovered by two
-    equi-joins back onto the doc→print table. The quadratic term is
-    |distinct prints|², independent of corpus size — at 100 TB the doc→print
-    map stays a linear scan. (With 64-bit prints the print space itself gets
-    large; there the print-pair step becomes a banded-LSH equi-join on
-    16-bit sub-bands — pigeonhole-exact for hamming ≤ 3 — with the same
-    doc expansion afterwards.)
+    corpus; ≤ 65,536 always), qualifying print pairs come from a broadcast
+    nested-loop over the distinct prints, and doc pairs are recovered by
+    equi-joins back onto the doc→print map. Every hinted broadcast is
+    print-space-bounded, independent of corpus size: the print-pair frame
+    holds at most |prints| × |hamming-≤3 neighbourhood| / 2 rows (2¹⁶ × 349
+    ≈ 22.9M at 16 bits: 696 neighbours per print, each unordered pair once,
+    plus the print itself).
+    With 64-bit prints that step becomes a pigeonhole-banded equi-join on
+    16-bit sub-bands; the doc expansion after it is unchanged.
 
-    r15 (r14 verdict item 3): NOTHING corpus-sized is ever broadcast.
-    The r14 form broadcast the per-print ``collect_list(doc_id)`` group
-    frame — its row count is print-bounded but its doc-list payload is
-    O(corpus), a memory wall at 100 TB. Now the only broadcast frames are
-    PRINT-SPACE-bounded, independent of corpus size: the print-pair frame
-    holds at most |prints| × |hamming-≤3 neighbourhood| / 2 rows
-    (2¹⁶ × 349 ≈ 22.9M at 16 bits: 696 neighbours per print, each
-    unordered pair once, plus the print itself; the banded equi-join
-    below is what caps it if the print space widens):
-    1. print pairs: distinct prints × distinct prints under hamming ≤ 3 —
-       a broadcast nested-loop over two bounded sides (at 64-bit prints
-       this one step becomes the pigeonhole-banded equi-join on 16-bit
-       sub-bands; the doc expansion below is unchanged);
-    2. each doc attaches its qualifying neighbor prints from the
-       broadcast print-pair frame (map-side, keeps the scan spread);
-    3. doc pairs come from an equi-join of that candidate stream against
-       the per-doc print map on (neighbor print, salt) — nothing
-       corpus-sized is ever broadcast BY HINT (see the strategy note
-       below). The deterministic salt (``pmod(xxhash64(da), S)`` on the
-       candidate stream, the doc map exploded 0..S-1 — §2.5's
-       derived-not-random rule) splits every giant print group's pair
-       production S ways, so the r14 skew fix's spread-by-document
-       property survives the move off the group broadcast: a hot print's
-       pairs are produced by up to S tasks, and AQE's skew-join split
-       subdivides further at real scale. S multiplies only the LIGHT
-       one-row-per-doc print map (20-byte proxy rows, guide §8), never
-       the pair payload or the larger candidate stream.
-    Pair semantics are identical to r14: each unordered (da, db) meets
-    exactly once — cross-group pairs once via the fp_a ≤ fp_b normalized
-    print pair, in-group pairs once via da < db. The per-doc print frame
-    is persisted (the declared branch-point cache, same lifetime contract
-    as every other operator persist in the entry docstring): it feeds
-    three consumers (distinct prints, candidate stream, doc side).
+    Each doc attaches its neighbour prints from the broadcast print-pair
+    frame (map-side), and the candidate stream joins the doc→print map on
+    the neighbour print. That last join's strategy is the engine's: at
+    fixture scale the doc map is tiny and broadcasts, past the threshold it
+    is a shuffle join whose hot prints AQE's skew-join split divides.
 
-    Join strategy is left to the ENGINE's size statistics — nothing here
-    hints a broadcast of anything corpus-sized: at fixture scale the
-    (db, fp_b, salt) side is tiny and Spark picks a broadcast-hash join
-    (pair production then runs map-side over the persisted partitions);
-    past the autoBroadcast threshold it degrades to the salted shuffle
-    equi-join, with the salt + AQE skew split spreading hot prints —
-    the same engine-decides contract as _rep_docs' semi join.
-
-    The persisted frame is WIDENED before it materializes (keyed
-    repartition to the session's parallelism): the vote aggregate that
-    produces the prints AQE-coalesces to one partition at fixture scale,
-    and a 1-partition branch point would serialize the whole downstream
-    map pipeline — candidate attach, salt explode, and (in the broadcast
-    regime) the entire quadratic pair production — on ONE task
-    (profiled: a 0.75 s single-task job, ~40% of the query). A keyed
-    repartition pays no pre-sort (r14 rule) and the 2-column frame is
-    print-map-sized, so the extra exchange is noise at any scale."""
-    fp = (
-        _simhash_frame(spark, sf_dir)
-        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    Each unordered (da, db) meets exactly once: cross-print pairs via the
+    fp_a < fp_b normalized print pair, in-print pairs via da < db. The
+    doc→print map is persisted (the declared branch-point cache, same
+    lifetime contract as every other operator persist in the entry
+    docstring); it feeds the distinct prints, the candidate stream and the
+    doc side, and keeps the width of _simhash_frame's keyed spread."""
+    fp = _simhash_frame(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
     p = fp.select("simhash").distinct()
     ham = F.expr("bit_count(fp_a ^ fp_b)")
     ppairs = p.select(F.col("simhash").alias("fp_a")).join(
         F.broadcast(p.select(F.col("simhash").alias("fp_b"))),
         (F.col("fp_a") <= F.col("fp_b")) & (ham <= 3),
     )
-    # salt width: enough lanes to spread one giant print group across the
-    # executors' cores, capped so the explode amplification stays bounded
-    # (the cap is a fan-out floor, not a tuning constant — at cluster
-    # scale AQE's skew split takes over past it)
-    n_salt = max(8, min(64, spark.sparkContext.defaultParallelism))
-    # The EXPLODED side is the one-row-per-doc print map (S light rows
-    # per doc); the candidate stream carries ONE deterministic salt
-    # derived from its own doc id (§2.5's derived-not-random rule). The
-    # first cut exploded the CANDIDATE stream instead, and prints of a
-    # near-dup corpus cluster so hard that |cand| ≈ 90×|docs| at sf0.1
-    # (446k rows, ×32 salt = 14.3M probe rows — measured ~1 s of pure
-    # explode+probe). Salting the doc map bounds the amplification at
-    # S×|docs| — 24× less salted volume here, and the same ratio at any
-    # scale where prints cluster. Pair coverage is unchanged: doc db
-    # rides in EVERY lane, candidate (da, fp_b) probes exactly lane
-    # salt(da), so each (da, db) meets exactly once.
-    cand = (
-        fp.select(F.col("doc_id").alias("da"), F.col("simhash").alias("fp_a"))
-        .join(F.broadcast(ppairs), "fp_a")
-        .withColumn(
-            "salt", F.pmod(F.xxhash64("da"), F.lit(n_salt)).cast("int")
-        )
-    )
-    docs = fp.select(
-        F.col("doc_id").alias("db"), F.col("simhash").alias("fp_b")
-    ).withColumn("salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1))))
+    cand = fp.select(
+        F.col("doc_id").alias("da"), F.col("simhash").alias("fp_a")
+    ).join(F.broadcast(ppairs), "fp_a")
+    docs = fp.select(F.col("doc_id").alias("db"), F.col("simhash").alias("fp_b"))
     return (
-        cand.join(docs, ["fp_b", "salt"])
+        cand.join(docs, "fp_b")
         # fp_a < fp_b: every (da,db) combo appears exactly once, order
         # normalized below; fp_a = fp_b: keep da < db so in-group pairs
         # emit exactly once.

@@ -6,7 +6,6 @@ jobs produce partitioned Parquet, and every query runs against that. The
 modules here hold one dependency-free decoder per input format — NetCDF
 (``netcdf_classic`` + ``netcdf4_min``/``hdf5_min``), shapefile
 (``shapefile_min`` + ``crs_min``), WARC (``warc_min``), GeoTIFF
-(``geotiff_min``), Zarr (``zarr_min`` with the ``blosc_min``/``zstd_min``
-codecs) and Arrow IPC (``arrow_ipc``) — plus the CSV sinks the reference
-writes (S3–S5).
+(``geotiff_min``) and Zarr (``zarr_min`` with the ``blosc_min``/``zstd_min``
+codecs) — plus the CSV sinks the reference writes (S3–S5).
 """

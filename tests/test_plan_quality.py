@@ -287,9 +287,11 @@ _PLAN_BOUNDS = {
     # collapse agg now sits inside the persisted shingle subtree)
     "incremental_dedup": (11, 4),
     "distinct_counts": (3, 0),
-    # merged fingerprint family (r7): 2 rebalances + simhash doc agg
-    # + sort; the doc-keyed join broadcasts at fixture scale only
-    "doc_fingerprint_profile": (4, 0),
+    # merged fingerprint family (r7): md5-side scan rebalance + the
+    # simhash side's doc_id-keyed spread, which its vote agg reuses (no
+    # agg exchange of its own) + sort; the doc-keyed join broadcasts at
+    # fixture scale only
+    "doc_fingerprint_profile": (3, 0),
     "doc_length_histogram": (2, 0),
     "doc_quality_scores": (1, 0),
     "doc_rolling_fingerprints": (2, 0),  # +Python-worker fan-out rebalance
@@ -332,6 +334,7 @@ _PLAN_BOUNDS = {
     # shuffle join this operator exists to demonstrate at skew scale
     "salted_skew_join": (3, 0),
     "session_windows": (2, 0),
+    # 4 prints of the persisted print map's keyed spread + 2 print-distinct exchanges
     "simhash_near_pairs": (6, 1),
     "sliding_windows": (2, 0),
     # 3 measure branches each print the shared rebalanced-scan exchange +
@@ -754,6 +757,20 @@ def test_domain_divergence_single_corpus_pass(spark, sf_dir):
     plan = I.plan_string(QUERIES["source_domain_divergence"](spark, sf_dir), "simple")
     assert plan.count("InMemoryTableScan") >= 4, plan
     assert plan.count("FileScan") == plan.count("InMemoryRelation"), plan
+
+
+def test_simhash_pair_stream_keeps_width(spark, sf_dir):
+    """simhash_near_pairs's quadratic pair production runs map-side over
+    the persisted doc→print map, so that map's width is the pair stream's
+    width. At fixture scale the vote aggregate alone would AQE-coalesce to
+    one partition and serialize the whole pair production on one task;
+    the doc_id-keyed scan spread in _simhash_frame (reused by the vote
+    aggregate, never coalesced) must keep it on more than one."""
+    from pyspark.sql import functions as F
+
+    pairs = QUERIES["simhash_near_pairs"](spark, sf_dir)
+    live = pairs.select(F.spark_partition_id().alias("pid")).distinct().count()
+    assert live > 1, f"pair stream ran on {live} partition(s)"
 
 
 def test_skew_salt_spreads_hot_keys(spark, sf_dir):
